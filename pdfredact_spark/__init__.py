@@ -14,8 +14,8 @@ Layers
                    mask); exact-semantics port targets cited per function
 - ``fixtures``   — deterministic fixture corpus mirroring the reference test suite
 - ``plan``       — camelCase redaction-plan JSON (serializer parity)
-- ``pipeline``   — the distributed engine: Arrow-native map stages,
-                   salted per-page parallelism, offset-keyed reassembly
+- ``pipeline``   — the distributed engine: one shuffle-free Arrow-native
+                   map stage per job (scan -> mapInArrow -> sink)
 - ``checkpoint`` — per-partition lineage metrics + commit-log resume
 - ``queries``    — driver-contract query inventory (+ DuckDB oracle SQL)
 """

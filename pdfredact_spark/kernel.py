@@ -5,8 +5,7 @@ the span data model. Every function cites the reference behavior it
 reproduces (file:line into /root/reference/). These kernels are unit-tested
 as plain Python (tests/test_kernel.py ports the 16 reference xUnit facts)
 and are then invoked batch-at-a-time from Arrow-vectorized ``mapInArrow``
-/ ``applyInArrow`` stages in pipeline.py — there is no Spark
-row-at-a-time Python anywhere.
+stages in pipeline.py — there is no Spark row-at-a-time Python anywhere.
 
 Data layout: the core consumes a document as FLAT PARALLEL ARRAYS
 (kinds/texts/refs/offsets — the ``*_cols`` entry points), which lets the

@@ -102,17 +102,6 @@ DOC_SCHEMA = StructType(
     ]
 )
 
-# Flat (exploded) span rows — the unit that crosses the Arrow boundary.
-FLAT_SPAN_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("offset", IntegerType(), False),
-    ]
-)
-
 # RedactionRegion analog (reference Models/RedactionRegion.cs:7-49).
 REGION_SCHEMA = StructType(
     [

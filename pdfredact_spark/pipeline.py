@@ -1,11 +1,10 @@
 """The distributed redaction pipeline (SURVEY.md §3.4 lifecycle).
 
-Plan shape, arrived at by measurement (see BENCH/BASELINE.md):
+There is ONE plan shape, arrived at by measurement (see BENCH/BASELINE.md).
+Every input row is already a complete document, so the fused locate+apply
+runs as
 
-DEFAULT (zero-shuffle): every input row is already a complete document, so
-the fused locate+apply runs as
-
-    parquet scan -> mapInArrow doc-batch redactor -> sink
+    scan -> mapInArrow doc-batch redactor -> sink
 
 one narrow, fully pipelined stage: no shuffle, no reassembly (the kernel
 emits finished offset-sorted span sequences per doc), no per-group Python
@@ -18,12 +17,22 @@ partitions). A mega document runs inside one task (pages loop in the
 kernel); the int32 offset encoding bounds a doc at ~100k spans, bounding
 the straggler.
 
-MEGA-SPLIT option (``mega_split=True``) for corpora with pathological
-giants: oversized docs explode to flat spans and fan out per PAGE (offset
-band) — reference semantics are strictly per-page
-(PdfPigTextLocator.cs:45-49), so pages are independent — then reassemble
-per doc with a JVM-side collect_list + array_sort. Costs a second scan of
-the input plus two shuffles for the mega slice, so it is opt-in.
+Why only this shape: two alternates were built and deleted because the
+plain Spark scan beat both on a 4-vCPU host.
+
+- A pyarrow direct scan: Python workers decode bare parquet themselves
+  from a distributed (file, row-group) list, skipping the JVM's
+  row->Arrow input conversion. It was slower at every layout tried:
+  3.93 s vs 1.98 s on an 8k-doc mixed corpus at local[4], 9.03 s vs
+  4.01 s at local[1], 21.8 s vs 2.0 s over 128 files. It also crashed
+  on re-written (all-nullable) parquet and bypassed Spark's file
+  options. Removing it took the redact-mixed benchmark from 4.14 s to
+  2.32 s per job and from 2432 MB to 2219 MB peak memory.
+- A page fan-out for mega docs: docs over 4096 spans exploded to flat
+  spans, redacted per page (pages are independent,
+  PdfPigTextLocator.cs:45-49) and were reassembled with collect_list +
+  array_sort. It cost a second scan and two shuffles, and took 3.39 s
+  vs 1.98 s on the same corpus.
 
 Error routing (rotation fail-fast parity, PdfSharpMaskApplicator.cs:95-102)
 is carried as an ``error`` column computed in the same pass — callers split
@@ -70,9 +79,6 @@ from pdfredact_spark.model import (
 )
 from pdfredact_spark.spanmodel import DECI, ROW_BASE
 
-#: docs with more spans than this take the page-parallel mega path
-MEGA_SPAN_THRESHOLD = 4096
-
 REDACTED_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -81,19 +87,6 @@ REDACTED_SCHEMA = StructType(
         StructField("error", StringType(), True),
     ]
 )
-
-_FLAT_PAGE_OUT = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("offset", IntegerType(), False),
-        StructField("n_hits", IntegerType(), False),
-    ]
-)
-
-_REGION_STRUCT = StructType([f for f in REGION_SCHEMA.fields if f.name != "doc_id"])
 
 
 def docs_to_df(spark: SparkSession, docs: list[dict]) -> DataFrame:
@@ -292,221 +285,7 @@ def _build_redacted_batch(doc_ids, out_k, out_t, out_r, out_o, starts, hits, err
     )
 
 
-def _make_page_apply(rules: list[Rule], flatten: bool):
-    """Page-grain redactor for mega docs (applyInArrow per (doc, band)):
-    the group's flat rows feed the columnar kernel directly, no pandas."""
-
-    def fn(tbl: pa.Table) -> pa.Table:
-        doc_id = tbl.column("doc_id")[0].as_py()
-        kinds = tbl.column("kind").to_pylist()
-        texts = tbl.column("text").to_pylist()
-        refs = tbl.column("media_ref").to_pylist()
-        offs = tbl.column("offset").to_pylist()
-        try:
-            k, t, r, o, _, h = redact_document_cols(
-                doc_id, kinds, texts, refs, offs, rules, flatten=flatten
-            )
-        except Exception as e:  # noqa: BLE001 — malformed mega docs too
-            # Same routing contract as the doc-grain path (round-5
-            # review: catching only RotationError let one garbage MEGA
-            # doc fail its task and, after retries, the whole job).
-            msg = str(e) if isinstance(e, RotationError) else f"{type(e).__name__}: {e}"
-            return pa.table(
-                {
-                    "doc_id": pa.array([doc_id], type=pa.string()),
-                    "kind": pa.array(["__error__"], type=pa.string()),
-                    "text": pa.array([msg], type=pa.string()),
-                    "media_ref": pa.array([""], type=pa.string()),
-                    "offset": pa.array([0], type=pa.int32()),
-                    "n_hits": pa.array([0], type=pa.int32()),
-                }
-            )
-        n = len(k)
-        return pa.table(
-            {
-                "doc_id": pa.array([doc_id] * n, type=pa.string()),
-                "kind": pa.array(k, type=pa.string()),
-                "text": pa.array(t, type=pa.string()),
-                "media_ref": pa.array(r, type=pa.string()),
-                "offset": pa.array(o, type=pa.int32()),
-                "n_hits": pa.array([h] + [0] * (n - 1) if n else [], type=pa.int32()),
-            }
-        )
-
-    return fn
-
-
-#: rows per pyarrow-read batch on the direct-scan path — matches the
-#: session default for spark.sql.execution.arrow.maxRecordsPerBatch so
-#: the kernel sees the same batch shape either way
-_PYREAD_BATCH_ROWS = 2048
-
-
-def _parquet_scan_files(df: DataFrame) -> list[str] | None:
-    """The document files behind ``df`` — iff it is a BARE, unpartitioned,
-    local-filesystem parquet scan whose schema is exactly the document
-    model (the shape `spark.read.parquet(corpus)` hands the bench and
-    soak jobs). Anything else (filters, projections, in-memory frames,
-    partition columns, remote filesystems) returns None and the caller
-    keeps the ordinary JVM scan.
-
-    Why: Spark feeds a Python stage by converting scan output
-    row-by-row into Arrow (and the stage's Arrow output back into rows).
-    Measured at the bench redaction leg, that INPUT conversion burns as
-    much CPU as the redaction kernel itself. When the input is plain
-    parquet on a filesystem every executor can read, the Python workers
-    can decode it natively (pyarrow) from a distributed file/row-group
-    list, eliminating the entire input-side conversion. The rows
-    produced are identical — this changes HOW bytes reach the kernel,
-    never what is computed. PDFREDACT_PYREAD=0 disables."""
-    import os
-
-    if os.environ.get("PDFREDACT_PYREAD", "1") == "0":
-        return None
-    try:
-        # simpleString ignores nullability — a read-back parquet schema
-        # is all-nullable while DOC_SCHEMA declares required fields; the
-        # VALUES are what must agree, and null spans/offsets route
-        # through the kernel's error paths identically on both scans
-        if df.schema.simpleString() != DOC_SCHEMA.simpleString():
-            return None
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        rel = plan.relation()
-        if rel.getClass().getSimpleName() != "HadoopFsRelation":
-            return None
-        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
-            return None
-        if rel.partitionSchema().length() != 0:
-            return None
-        paths: list[str] = []
-        for f in df.inputFiles():
-            if f.startswith("file:"):
-                from urllib.parse import unquote, urlparse
-
-                paths.append(unquote(urlparse(f).path))
-            elif f.startswith("/"):
-                paths.append(f)
-            else:
-                return None  # remote FS: the JVM scan knows how to read it
-        return sorted(paths) or None
-    except Exception:
-        return None
-
-
-def _pyarrow_scan_units(paths: list[str], parallelism: int) -> list[tuple]:
-    """(path, row_group) work units: file-grain by default (corpus
-    layouts size files to ~1 task each); when files are too FEW to feed
-    the cluster, split at row-group grain (footer metadata reads,
-    bounded to small file counts) — pyarrow reads row groups
-    independently, so a single huge file no longer caps parallelism."""
-    units: list[tuple] = [(p, None) for p in paths]
-    if len(paths) < 2 * parallelism and len(paths) <= 256:
-        try:
-            import pyarrow.parquet as pq
-
-            rg_units: list[tuple] = []
-            for p in paths:
-                n = pq.ParquetFile(p).metadata.num_row_groups
-                rg_units.extend((p, g) for g in range(max(n, 1)))
-            units = rg_units
-        except Exception:
-            units = [(p, None) for p in paths]
-    return units
-
-
-def _make_file_doc_map(doc_map):
-    """Wrap a doc-batch Arrow redactor so it consumes (path, row_group)
-    rows and decodes the parquet itself. Batches are cast to the exact
-    document Arrow schema when a file's physical schema differs (field
-    order / nullability), so the kernel sees byte-identical inputs to
-    the JVM-scan path."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(DOC_SCHEMA)
-
-    def read_units(rb) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        paths = rb.column(0).to_pylist()
-        groups = rb.column(1).to_pylist()
-        for path, g in zip(paths, groups):
-            pf = pq.ParquetFile(path)
-            # use_threads=False: the default spins arrow's GLOBAL cpu
-            # pool (os.cpu_count() threads) in EVERY python worker —
-            # at local[32] that is 32x32 decode threads whose
-            # oversubscription bursts showed up as a 5.7x task-time
-            # tail in the 5M-doc soak (median 3.7s, max 20.8s; with
-            # single-threaded decode the JVM-scan tail is 2.4x). One
-            # Spark task = one core's budget; decode inside it serially.
-            if g is None:
-                it = pf.iter_batches(
-                    batch_size=_PYREAD_BATCH_ROWS,
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-            else:
-                if g >= pf.metadata.num_row_groups:
-                    continue  # guard unit built from a stale footer read
-                it = pf.iter_batches(
-                    batch_size=_PYREAD_BATCH_ROWS,
-                    row_groups=[g],
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-            for b in it:
-                if b.schema.names == target.names and b.schema.types == target.types:
-                    yield b
-                else:
-                    yield (
-                        pa.Table.from_batches([b]).cast(target).to_batches()[0]
-                    )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            yield from doc_map(read_units(rb))
-
-    return fn
-
-
-def _redact_files_df(spark: SparkSession, paths: list[str], doc_map) -> DataFrame:
-    units = _pyarrow_scan_units(paths, spark.sparkContext.defaultParallelism)
-    # EXACTLY one unit per partition via parallelize's contiguous
-    # slicing — a repartition(n) here round-robins each input partition
-    # from its own random phase, which clumps 4-6 files onto some tasks
-    # and zero onto others (measured: a 5.7x task-duration tail in the
-    # 5M-doc soak, median 3.5s / max 20.9s; even slicing restores the
-    # JVM scan's flat profile). No exchange at all: the file list is
-    # parallelized directly, document bytes never move.
-    rdd = spark.sparkContext.parallelize(units, len(units))
-    src = spark.createDataFrame(rdd, "path string, row_group int")
-    return src.mapInArrow(_make_file_doc_map(doc_map), schema=REDACTED_SCHEMA)
-
-
-def _span_order(a, b):
-    """Deterministic reassembly order: offset asc then kind/media_ref/text —
-    ties between coincident spans resolve identically on every run/retry."""
-    return (
-        F.when(a.offset < b.offset, -1)
-        .when(a.offset > b.offset, 1)
-        .when(a.kind < b.kind, -1)
-        .when(a.kind > b.kind, 1)
-        .when(a.media_ref < b.media_ref, -1)
-        .when(a.media_ref > b.media_ref, 1)
-        .when(a.text < b.text, -1)
-        .when(a.text > b.text, 1)
-        .otherwise(0)
-    )
-
-
-def redact_full(
-    df: DataFrame,
-    rules: list[Rule],
-    flatten: bool = False,
-    num_partitions: int | None = None,
-    mega_split: bool = False,
-) -> DataFrame:
+def redact_full(df: DataFrame, rules: list[Rule], flatten: bool = False) -> DataFrame:
     """Single-pass fused locate+apply (RedactCommand.cs:126-225 lifecycle).
 
     Returns (doc_id, spans, n_rule_hits, error): error is null for clean
@@ -526,82 +305,11 @@ def redact_full(
                 F.lit("ValueError: spans column is null"),
             ).cast("string").alias("error"),
         )
-
-    doc_map = _make_doc_map_arrow(rules, flatten)
-    if not mega_split:
-        if num_partitions:
-            df = df.repartition(num_partitions)
-            return df.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
-        files = _parquet_scan_files(df)
-        if files:
-            return _redact_files_df(df.sparkSession, files, doc_map)
-        return df.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
-
-    # NULL-spans rows must take the doc-grain branch, where the Arrow
-    # stage routes them to the error output: a bare size() predicate is
-    # NULL for them, so BOTH filters would drop the doc silently
-    # (round-5 review).
-    is_mega = F.coalesce(
-        F.size("spans") > MEGA_SPAN_THRESHOLD, F.lit(False)
-    )
-
-    # No unconditional repartition (round-5 review): rows are complete
-    # docs and the map needs no co-partitioning — parallelism comes from
-    # input splits, exactly like the default path; the docstring's cost
-    # model prices mega_split at two shuffles for the MEGA slice only.
-    small_src = df.where(~is_mega)
-    if num_partitions:
-        small_src = small_src.repartition(num_partitions, "doc_id")
-    small_out = small_src.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
-
-    # Mega path: explode -> per-page fan-out -> JVM reassembly.
-    big = df.where(is_mega)
-    flat = big.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.expr(f"s.offset div {PAGE_BASE}").alias("band"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
-    page_out = flat.groupBy("doc_id", "band").applyInArrow(
-        _make_page_apply(rules, flatten), schema=_FLAT_PAGE_OUT
-    )
-    err_col = F.max(F.when(F.col("kind") == "__error__", F.col("text"))).alias("error")
-    big_out = (
-        page_out.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("kind") != "__error__",
-                        F.struct("kind", "text", "media_ref", "offset"),
-                    )
-                ),
-                _span_order,
-            ).alias("spans"),
-            F.sum("n_hits").cast("long").alias("n_rule_hits"),
-            err_col,
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("error").isNull(), F.col("spans")).alias("spans"),
-            # path parity (round-5 review): the doc-grain branch reports
-            # n_rule_hits=0 for an errored doc; an errored mega doc must
-            # not keep hits summed from its successful pages
-            F.when(F.col("error").isNull(), F.col("n_rule_hits"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_rule_hits"),
-            "error",
-        )
-    )
-    return small_out.unionByName(big_out)
+    return df.mapInArrow(_make_doc_map_arrow(rules, flatten), schema=REDACTED_SCHEMA)
 
 
 def redact(
-    df: DataFrame, rules: list[Rule], flatten: bool = False,
-    num_partitions: int | None = None, mega_split: bool = False,
+    df: DataFrame, rules: list[Rule], flatten: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (redacted_docs, errors). Both derive from one single-pass
     plan; consuming BOTH triggers recompute — materialize redact_full()
@@ -610,18 +318,17 @@ def redact(
     (round-5 review: a verbatim `return df` leaked extra input columns
     into the good output and emitted NULL-spans garbage rows as clean
     docs)."""
-    full = redact_full(df, rules, flatten, num_partitions, mega_split)
+    full = redact_full(df, rules, flatten)
     good = full.where(F.col("error").isNull()).select("doc_id", "spans")
     errors = full.where(F.col("error").isNotNull()).select("doc_id", "error")
     return good, errors
 
 
 def redact_with_hits(
-    df: DataFrame, rules: list[Rule], flatten: bool = False,
-    num_partitions: int | None = None, mega_split: bool = False,
+    df: DataFrame, rules: list[Rule], flatten: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """Like redact() but the main output keeps (n_rule_hits, n_spans)."""
-    full = redact_full(df, rules, flatten, num_partitions, mega_split)
+    full = redact_full(df, rules, flatten)
     good = full.where(F.col("error").isNull()).select(
         "doc_id", "spans", "n_rule_hits", F.size("spans").cast("long").alias("n_spans")
     )
@@ -629,12 +336,10 @@ def redact_with_hits(
     return good, errors
 
 
-def locate_regions(
-    df: DataFrame, rules: list[Rule], num_partitions: int | None = None
-) -> DataFrame:
+def locate_regions(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """Locate-only (the reference `plan` command, PlanCommand.cs:163-169):
-    emits RedactionRegion rows. Doc-grain (mega docs run whole — locate
-    emits small region lists, so page fan-out buys little here)."""
+    emits RedactionRegion rows, one doc per kernel call like
+    redact_full."""
     spark = df.sparkSession
     if not rules:
         return spark.createDataFrame([], schema=REGION_SCHEMA)
@@ -686,11 +391,9 @@ def locate_regions(
                        "matched_text", "rule_pattern", "page_rotation"],
             )
 
-    # repartition only on request (round-5 review): the map is purely
-    # row-wise over complete docs, so the default path inherits input-
-    # split parallelism instead of hash-shuffling the full span table
-    if num_partitions:
-        df = df.repartition(num_partitions, "doc_id")
+    # no repartition (round-5 review): the map is purely row-wise over
+    # complete docs, so it inherits input-split parallelism instead of
+    # hash-shuffling the full span table
     return df.mapInArrow(fn, schema=REGION_SCHEMA)
 
 

@@ -71,11 +71,7 @@ def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's shuffle width — used
     right after a scan whose input cannot feed enough tasks, when the
     per-row work above it (regex/md5/explode/HOF folds) dwarfs one tiny
-    exchange of the rows. PDFREDACT_SCAN_SPREAD=0 disables globally."""
-    import os
-
-    if os.environ.get("PDFREDACT_SCAN_SPREAD", "1") == "0":
-        return df
+    exchange of the rows."""
     spark = df.sparkSession
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -89,11 +85,8 @@ def _spread(df: DataFrame) -> DataFrame:
 #: work on the data can possibly cost — measured at sf0.1 (0.6 MB
 #: documents): spread=1 lost 0.3-0.7s per query vs spread=0, while at
 #: 10x the bytes it won 2-3x. Irrelevant at production scale (nothing
-#: is MBs); the gate protects small-SF runs. Env-overridable.
-def _spread_min_bytes() -> int:
-    import os
-
-    return int(os.environ.get("PDFREDACT_SPREAD_MIN_BYTES", 3_000_000))
+#: is MBs); the gate protects small-SF runs.
+_SPREAD_MIN_BYTES = 3_000_000
 
 
 def _needs_spread(spark: SparkSession, path: str) -> bool:
@@ -107,7 +100,7 @@ def _needs_spread(spark: SparkSession, path: str) -> bool:
         probe = _scan_units(path, enough=par)
         _SCAN_UNITS_CACHE[path] = probe
     units, nbytes = probe
-    return units < par and nbytes >= _spread_min_bytes()
+    return units < par and nbytes >= _SPREAD_MIN_BYTES
 
 
 def _t(

@@ -23,6 +23,7 @@ from pdfredact_spark.pipeline import (
     docs_to_df,
     locate_regions,
     redact,
+    redact_full,
     redact_with_hits,
     region_summary,
 )
@@ -113,60 +114,6 @@ def test_empty_rules_routes_null_spans(spark):
     assert err == {"nullrow": "ValueError: spans column is null"}
 
 
-def test_mega_split_routes_null_spans_and_zeroes_errored_hits(spark):
-    """Round-5 review, two mega-path parity holes: (1) a NULL-spans row
-    made BOTH mega filters NULL, silently dropping the doc from both
-    outputs; (2) an errored mega doc kept n_rule_hits summed from its
-    successful pages while the doc-grain path reports 0."""
-    from pdfredact_spark.fixtures import page_span
-    from pdfredact_spark.pipeline import redact_full
-
-    rot = mega_doc("rot-mega", n_spans=6000)  # > MEGA_SPAN_THRESHOLD
-    rot["spans"][0] = page_span(1, rotation=90)  # page 1 fails fast
-    nullable = (
-        "doc_id string, "
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    docs = docs_to_df(spark, [demo_doc("ok"), rot])
-    null_row = spark.createDataFrame([("nullrow", None)], nullable)
-    full = redact_full(
-        docs.unionByName(null_row, allowMissingColumns=False),
-        [SSN_RULE],
-        mega_split=True,
-    )
-    rows = {r["doc_id"]: r for r in full.collect()}
-    assert set(rows) == {"ok", "rot-mega", "nullrow"}  # nothing dropped
-    assert rows["nullrow"]["error"] == "ValueError: spans column is null"
-    assert rows["rot-mega"]["error"] is not None
-    assert rows["rot-mega"]["n_rule_hits"] == 0  # doc-grain parity
-    assert rows["ok"]["error"] is None
-
-
-def test_mega_page_apply_quarantines_garbage(spark):
-    """Round-5 review: the per-page mega redactor caught only
-    RotationError — any other kernel exception from one garbage mega doc
-    failed its task and, after retries, the whole job. It must route
-    like the doc-grain path."""
-    import pyarrow as pa
-
-    from pdfredact_spark.pipeline import _make_page_apply
-
-    fn = _make_page_apply([SSN_RULE], flatten=False)
-    tbl = pa.table(
-        {
-            "doc_id": ["bad"],
-            "band": [1],
-            "kind": ["page"],
-            "text": ["<page>:not-a-number"],
-            "media_ref": [""],
-            "offset": [200_000_000],
-        }
-    )
-    out = fn(tbl)
-    assert out.column("kind").to_pylist() == ["__error__"]
-    assert "ValueError" in out.column("text").to_pylist()[0]
-
-
 def test_locate_regions_matches_kernel(spark):
     docs = [demo_doc("ld-1"), demo_doc("ld-2")]
     df = docs_to_df(spark, docs)
@@ -206,8 +153,8 @@ def test_corpus_matches_kernel_and_metrics(spark):
 
 
 def test_mega_doc_through_spark(spark):
-    """Skew probe: both the default (inline) and the page-fan-out
-    (mega_split) paths produce exactly the kernel's span sequences."""
+    """Skew probe: a mega doc runs whole inside one task and produces
+    exactly the kernel's span sequences."""
     docs = [mega_doc("mega-1", n_spans=12_000), demo_doc("small-1")]
     df = docs_to_df(spark, docs)
     expected = {}
@@ -215,19 +162,8 @@ def test_mega_doc_through_spark(spark):
         exp, _, _ = redact_document(d["doc_id"], d["spans"], [SSN_RULE])
         expected[d["doc_id"]] = [(s["kind"], s["text"], s["media_ref"]) for s in exp]
 
-    for mega_split in (False, True):
-        out, _ = redact(df, [SSN_RULE], mega_split=mega_split)
-        got = invariant_rows(out)
-        assert got == expected, f"mega_split={mega_split}"
-    # the mega doc's work really was split across >1 page group
-    n_bands = (
-        df.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("doc_id") == "mega-1")
-        .select(F.expr("s.offset div 200000000").alias("b"))
-        .distinct()
-        .count()
-    )
-    assert n_bands >= 2
+    out, _ = redact(df, [SSN_RULE])
+    assert invariant_rows(out) == expected
 
 
 def test_malformed_doc_routes_to_errors(spark):
@@ -278,39 +214,22 @@ def test_large_random_differential_vs_kernel(spark):
         assert got[d["doc_id"]] == [(s["kind"], s["text"], s["media_ref"]) for s in exp], d["doc_id"]
 
 
-def test_pyarrow_direct_scan_parity(spark, tmp_path):
-    """The direct pyarrow read path (round 8): a bare parquet scan of the
-    document schema is decoded inside the Python stage from a distributed
-    (path, row_group) list — results must be IDENTICAL to the JVM-scan
-    path, detection must refuse anything but a bare scan, and
-    PDFREDACT_PYREAD=0 must disable it."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pdfredact_spark.fixtures import SSN_RULE, corpus, demo_doc
-    from pdfredact_spark.pipeline import (
-        _parquet_scan_files,
-        docs_to_df,
-        redact_full,
-    )
-
+def test_rewritten_parquet_matches_in_memory(spark, tmp_path):
+    """A corpus Spark has read back and re-written is all-nullable on
+    disk, down to the span struct fields. Redacting that scan must give
+    every doc the same spans, n_rule_hits and error as the in-memory
+    frame — including a rotated doc, mega docs and a NULL-spans row."""
     docs = corpus(60, mega_every=25)
     docs.append(demo_doc("rot-err", rotation_page1=90))
-    mem_df = docs_to_df(spark, docs)
-    p = str(tmp_path / "corpus")
+    null_row = spark.createDataFrame(
+        [("nullrow", None)],
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    mem_df = docs_to_df(spark, docs).unionByName(null_row)
+    p, q = str(tmp_path / "p"), str(tmp_path / "q")
     mem_df.repartition(5).write.parquet(p)
-    scan_df = spark.read.parquet(p)
-
-    files = _parquet_scan_files(scan_df)
-    assert files and len(files) == 5, files
-    # non-bare plans and disabled env must fall back
-    assert _parquet_scan_files(scan_df.where(F.col("doc_id") > "a")) is None
-    os.environ["PDFREDACT_PYREAD"] = "0"
-    try:
-        assert _parquet_scan_files(scan_df) is None
-    finally:
-        os.environ.pop("PDFREDACT_PYREAD", None)
+    spark.read.parquet(p).write.parquet(q)
 
     def key(rows):
         return {
@@ -318,13 +237,9 @@ def test_pyarrow_direct_scan_parity(spark, tmp_path):
             for r in rows
         }
 
-    out = redact_full(scan_df, [SSN_RULE])
-    # one (path, row_group) unit per task — a round-robin repartition
-    # here clumped 4-6 files onto some tasks (5.7x soak straggler)
-    assert out.rdd.getNumPartitions() == 5
-
-    got = key(out.collect())
+    got = key(redact_full(spark.read.parquet(q), [SSN_RULE]).collect())
     want = key(redact_full(mem_df, [SSN_RULE]).collect())
+    assert len(want) == len(docs) + 1
     assert got == want
-    # the rotated doc really exercised the error routing on the new path
-    assert got["rot-err"][2] is not None and "rotation" in got["rot-err"][2].lower()
+    assert "rotation" in got["rot-err"][2].lower()
+    assert got["nullrow"] == (None, 0, "ValueError: spans column is null")

@@ -85,45 +85,37 @@ def test_q1_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_default_redact_plan_is_shuffle_free(spark):
+def test_default_redact_plan_is_shuffle_free(spark, tmp_path):
     """The zero-shuffle design (BENCH/BASELINE.md finding #2): scan ->
-    mapInPandas -> sink with NO Exchange in the default path."""
-    docs = docs_to_df(spark, corpus(8)).where(F.lit(True))
-    out = redact_full(docs, [SSN_RULE])
-    plan = plan_of(out)
+    mapInArrow -> sink with NO Exchange — over an in-memory frame and
+    over a bare parquet scan, which must stay Spark's own parquet scan
+    feeding the Arrow stage directly (no Python-side file reader behind
+    a parallelized file list)."""
+    docs = docs_to_df(spark, corpus(8))
+    plan = plan_of(redact_full(docs, [SSN_RULE]))
     assert "MapInArrow" in plan  # Arrow-native stage, no pandas conversion
     assert "Exchange" not in plan, plan
+
+    p = str(tmp_path / "docs")
+    docs.write.parquet(p)
+    out = redact_full(spark.read.parquet(p), [SSN_RULE])
+    tree = tree_of(out)
+    ops = re.findall(r"^[\s+*-]*([A-Za-z][\w ]*?) +\(\d+\)$", tree, re.M)
+    assert ops == ["MapInArrow", "ColumnarToRow", "Scan parquet"], tree
+    assert "Exchange" not in tree, tree
+    assert "Scan ExistingRDD" not in tree, tree
 
 
 def test_locate_regions_default_is_shuffle_free(spark):
     """Round-5 review: locate_regions hash-shuffled the entire span
     table before a purely row-wise map. Default path must inherit
-    input-split parallelism like redact_full's default — repartition
-    only on explicit request."""
+    input-split parallelism like redact_full."""
     from pdfredact_spark.pipeline import locate_regions
 
     docs = docs_to_df(spark, corpus(8)).where(F.lit(True))
     plan = plan_of(locate_regions(docs, [SSN_RULE]))
     assert "Exchange" not in plan, plan
     assert "MapInArrow" in plan
-
-
-def test_mega_split_only_shuffles_mega_slice(spark):
-    """Round-6 review: the old version only asserted an Exchange and a
-    MapInArrow EXIST, which a whole-input shuffle also satisfies. Pin
-    the structure: the small-doc branch is MapInArrow directly over
-    Filter over Scan (no Exchange touches it), and the tree carries
-    EXACTLY the mega branch's two exchanges (page fan-out + reassembly)
-    — a third exchange means something started shuffling the full
-    input."""
-    docs = docs_to_df(spark, corpus(8))
-    out = redact_full(docs, [SSN_RULE], mega_split=True)
-    tree = tree_of(out)
-    assert re.search(
-        r":- MapInArrow \(\d+\)\s*\n\s*:\s*\+- Filter \(\d+\)\s*\n\s*:\s*\+- Scan",
-        tree,
-    ), tree
-    assert tree.count("Exchange") == 2, tree
 
 
 def test_whole_stage_codegen_on_sql_queries(spark):
